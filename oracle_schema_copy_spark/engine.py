@@ -3,8 +3,13 @@
 The reference exposes nine Groovy-binding verbs (``Main.java:106-211``):
 ``args, createConnection, createDbTarget, createFileTarget, executeSql,
 copyTree, deleteTree, copy, update``. Here scripts are plain Python and
-the verbs are methods on ``Engine``; targets are strategy objects
-(operation-log file target vs warehouse target vs JDBC target).
+the verbs are methods on ``Engine``. A target is anything with the
+verb surface ``insert/upsert/delete/execute_sql/close``, implemented once
+per storage kind: ``plans.oplog.OperationLogWriter`` (an operation-log
+file, the reference's OutputStreamTarget), ``plans.oplog.Warehouse`` (a
+parquet warehouse) and :class:`JdbcTarget` (a live database, the
+reference's ExecuteTarget; ``sources.derby.DerbyTarget`` is one on an
+embedded Derby database).
 """
 
 from __future__ import annotations
@@ -13,62 +18,14 @@ from dataclasses import dataclass
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from oracle_schema_copy_spark.catalog import Catalog
 from oracle_schema_copy_spark.operators import mutate, walk
 from oracle_schema_copy_spark.plans import oplog
+from oracle_schema_copy_spark.sources import dialects, jdbc_mutations
 from oracle_schema_copy_spark.sources import jdbc as jdbc_mod
-from oracle_schema_copy_spark.sources import jdbc_mutations
 from oracle_schema_copy_spark.sources.tables import load_table
-
-
-@dataclass
-class FileTarget:
-    """Writes operations to an operation log (the OutputStreamTarget analog)."""
-
-    log: oplog.OperationLogWriter
-
-    def insert(self, table: str, df: DataFrame) -> None:
-        self.log.insert(table, df)
-
-    def upsert(self, table: str, df: DataFrame, key) -> None:
-        self.log.upsert(table, df, key)
-
-    def delete(self, table: str, key_columns: str | list[str], keys: DataFrame) -> None:
-        self.log.delete(table, key_columns, keys)
-
-    def execute_sql(self, statements: list[str]) -> None:
-        self.log.ddl(statements)
-
-    def close(self) -> None:
-        self.log.close()
-
-
-@dataclass
-class WarehouseTarget:
-    """Applies operations directly to a parquet warehouse (ExecuteTarget
-    analog for file-backed tables)."""
-
-    wh: oplog.Warehouse
-
-    def insert(self, table: str, df: DataFrame) -> None:
-        if self.wh.exists(table):
-            self.wh.append(table, df)
-        else:
-            self.wh.write(table, df)
-
-    def upsert(self, table: str, df: DataFrame, key) -> None:
-        self.wh.rewrite(table, mutate.merge_upsert(self.wh.read(table), df, key))
-
-    def delete(self, table: str, key_columns: str | list[str], keys: DataFrame) -> None:
-        self.wh.rewrite(table, mutate.delete_by_keys(self.wh.read(table), key_columns, keys))
-
-    def execute_sql(self, statements: list[str]) -> None:
-        for s in statements:
-            self.wh.spark.sql(s)
-
-    def close(self) -> None:
-        pass
 
 
 @dataclass
@@ -77,16 +34,25 @@ class JdbcTarget:
 
     Inserts are parallel batched JDBC writes; upsert stages the update set
     and runs one MERGE; deletes batch keys into IN-lists (or stage + one
-    EXISTS delete for huge key sets); SQL lists execute in order on one
-    connection (see sources/jdbc_mutations.py). ``executor`` is injectable
-    for tests; by default statements run through the Spark JVM's
-    java.sql.DriverManager.
+    EXISTS delete for huge or composite key sets); SQL lists execute in
+    order on one connection (see sources/jdbc_mutations.py). ``executor``
+    is injectable for tests; by default statements run through the Spark
+    JVM's java.sql.DriverManager.
+
+    The dialect comes from ``conn.url`` (``sources/dialects.py``): for
+    Derby, Oracle and Postgres every table, column and key name is folded
+    to the case the database folds unquoted identifiers to, and Derby
+    writes get VARCHAR string columns. Any other scheme gets ANSI MERGE and
+    names exactly as given.
     """
 
     conn: jdbc_mod.JdbcConnection
     allow_production: bool = False
-    dialect: str = "ansi"
     executor: jdbc_mutations.StatementExecutor | None = None
+    varchar_len = 1024  # length of string columns in tables the target creates
+
+    def __post_init__(self) -> None:
+        self._dialect = dialects.dialect_for_url(self.conn.url)
 
     def _executor(self) -> jdbc_mutations.StatementExecutor:
         if self.executor is None:
@@ -95,34 +61,76 @@ class JdbcTarget:
             self.executor = jdbc_mutations.jvm_statement_executor(spark, self.conn)
         return self.executor
 
+    def _name(self, name: str) -> str:
+        return self._dialect.fold(name) if self._dialect else name
+
+    def _frame(self, df: DataFrame) -> tuple[DataFrame, dict[str, str] | None]:
+        """``df`` with folded column names, and its write options."""
+        if self._dialect is None:
+            return df, None
+        df = self._dialect.fold_frame(df)
+        return df, self._dialect.write_options(df.schema, varchar_len=self.varchar_len)
+
     def insert(self, table: str, df: DataFrame) -> None:
+        df, opts = self._frame(df)
         jdbc_mod.write_table(
-            df, self.conn, table, allow_production=self.allow_production
+            df,
+            self.conn,
+            self._name(table),
+            allow_production=self.allow_production,
+            write_options=opts,
         )
 
     def upsert(self, table: str, df: DataFrame, key) -> None:
+        df, opts = self._frame(df)
+        keys = [key] if isinstance(key, str) else list(key)
         jdbc_mutations.jdbc_upsert(
             df,
             self.conn,
-            table,
-            key,
+            self._name(table),
+            [self._name(k) for k in keys],
             executor=self._executor(),
-            dialect=self.dialect,
+            dialect=self._dialect.name if self._dialect else "ansi",
             allow_production=self.allow_production,
+            write_options=opts,
         )
 
-    def delete(self, table: str, key_columns: str | list[str], keys: DataFrame) -> None:
+    def delete(self, table: str, key_columns: str | list[str], keys) -> None:
+        opts = None
+        if isinstance(keys, DataFrame):
+            keys, opts = self._frame(keys)
+        cols = [key_columns] if isinstance(key_columns, str) else list(key_columns)
         jdbc_mutations.jdbc_delete(
             keys,
             self.conn,
-            table,
-            key_columns,
+            self._name(table),
+            [self._name(c) for c in cols],
             executor=self._executor(),
             allow_production=self.allow_production,
+            write_options=opts,
         )
 
     def execute_sql(self, statements: list[str]) -> None:
         self._executor()(statements)
+
+    def create_table(self, table: str, schema: T.StructType, primary_key=None) -> None:
+        """CREATE TABLE in the target's dialect. A URL of no known dialect
+        has no DDL generator: its tables are created by Spark's JDBC
+        writer on first insert, so this does nothing."""
+        if self._dialect is not None:
+            ddl = self._dialect.create_table_sql(
+                table, schema, primary_key=primary_key, varchar_len=self.varchar_len
+            )
+            self.execute_sql([ddl])
+
+    def read(
+        self, table: str, names: list[str], schema: T.StructType | None = None, **partition_kwargs
+    ) -> DataFrame:
+        """``table`` with the engine's column ``names`` (and, with
+        ``schema``, its Spark types) restored."""
+        spark = SparkSession.getActiveSession()
+        df = jdbc_mod.read_table(spark, self.conn, self._name(table), **partition_kwargs)
+        return dialects.fold_names(df, names, schema)
 
     def close(self) -> None:
         pass
@@ -147,11 +155,11 @@ class Engine:
 
     # -- targets (createDbTarget / createFileTarget) -------------------------
 
-    def create_file_target(self, path: str, rows_per_op: int = 10_000) -> FileTarget:
-        return FileTarget(oplog.OperationLogWriter(path, rows_per_op=rows_per_op))
+    def create_file_target(self, path: str, rows_per_op: int = 10_000) -> oplog.OperationLogWriter:
+        return oplog.OperationLogWriter(path, rows_per_op=rows_per_op)
 
-    def create_warehouse_target(self, root: str) -> WarehouseTarget:
-        return WarehouseTarget(oplog.Warehouse(self.spark, root))
+    def create_warehouse_target(self, root: str) -> oplog.Warehouse:
+        return oplog.Warehouse(self.spark, root)
 
     def create_db_target(
         self, conn: jdbc_mod.JdbcConnection, *, allow_production: bool = False

@@ -36,9 +36,11 @@ import os
 import shutil
 import tempfile
 from dataclasses import dataclass, field
-from typing import Callable, Iterator
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+
+from oracle_schema_copy_spark.operators import mutate
 
 MANIFEST = "manifest.jsonl"
 
@@ -65,7 +67,8 @@ class OpRecord:
 
 
 class OperationLogWriter:
-    """Append-only operation-log writer (the FileTarget / K2 sink).
+    """Append-only operation-log writer: the file target (K2 sink, the
+    reference's OutputStreamTarget).
 
     The manifest is written to a temp file and atomically renamed on
     ``close()`` so a partially-written log is never readable as valid.
@@ -94,11 +97,14 @@ class OperationLogWriter:
             )
         )
 
+    execute_sql = ddl  # the target verb: SQL statements, replayed in order
+
     def view(self, name: str, query: str) -> None:
-        """A view definition (S9): replayed as CREATE OR REPLACE VIEW over
-        the imported tables (temp view on Spark targets, executable DDL on
-        SQL-catalog/JDBC targets). Exported after data, like the
-        reference's other-objects phase (``CopyUtils.java:996-1010``)."""
+        """A view definition (S9): replayed as CREATE OR REPLACE TEMPORARY
+        VIEW over the imported tables by :func:`replay`; skipped by
+        :func:`replay_into_target`, since its text is Spark SQL. Exported
+        after data, like the reference's other-objects phase
+        (``CopyUtils.java:996-1010``)."""
         self._append(
             OpRecord(
                 seq=len(self._records),
@@ -229,23 +235,59 @@ class Warehouse:
         shutil.rmtree(trash, ignore_errors=True)
         self.tables_written.add(table)
 
+    # -- target verbs (the parquet ExecuteTarget) ----------------------------
+
+    def insert(self, table: str, df: DataFrame) -> None:
+        if self.exists(table):
+            self.append(table, df)
+        else:
+            self.write(table, df)
+
+    def upsert(self, table: str, df: DataFrame, key) -> None:
+        self.rewrite(table, mutate.merge_upsert(self.read(table), df, key))
+
+    def delete(self, table: str, key_columns: str | list[str], keys: DataFrame) -> None:
+        self.rewrite(table, mutate.delete_by_keys(self.read(table), key_columns, keys))
+
+    def execute_sql(self, statements: list[str]) -> None:
+        for s in statements:
+            self.spark.sql(s)
+
+    def close(self) -> None:
+        pass
+
+
+def _payload(spark: SparkSession, log_path: str, rec: OpRecord) -> DataFrame:
+    return spark.read.parquet(os.path.join(log_path, rec.payload))
+
+
+def _delete_keys(spark: SparkSession, log_path: str, rec: OpRecord) -> tuple[list[str], DataFrame]:
+    """Key columns and key frame of a delete record. ``key_columns`` is
+    the current form, ``key_column`` the pre-composite one. The frame is
+    projected by name: that tolerates a payload carrying extra columns
+    (e.g. a legacy single-key record over a wider key frame), where the
+    delete verbs require exact arity."""
+    keys = _payload(spark, log_path, rec)
+    cols = rec.params.get("key_columns") or [rec.params["key_column"]]
+    if set(cols) <= set(keys.columns):
+        keys = keys.select(*cols)
+    return cols, keys
+
 
 def replay(
     spark: SparkSession,
     log_path: str,
     warehouse: Warehouse,
     *,
-    execute_sql: Callable[[str], None] | None = None,
     on_opaque: str = "skip",
 ) -> list[OpRecord]:
     """Replay an operation log in seq order against a warehouse (S10).
 
-    ``execute_sql`` handles ddl records. Default None: DDL is *skipped* for
-    parquet warehouses — payload parquet is self-describing, and executing
-    CREATE TABLE against the live session catalog would shadow/pollute it.
-    Pass ``spark.sql`` (or a JDBC statement executor) when replaying into a
-    real SQL catalog. ``on_opaque`` is 'skip' (default — parquet targets
-    can't run Oracle DDL) or 'error'. Returns the applied records.
+    DDL records are *skipped*: payload parquet is self-describing, and
+    executing CREATE TABLE against the live session catalog would
+    shadow/pollute it. ``on_opaque`` is 'skip' (default — parquet targets
+    can't run Oracle DDL) or 'error'. Returns every record walked, the
+    skipped ones included.
 
     Replayed VIEW records (and the table temp views they read through)
     deliberately OUTLIVE the replay in the session catalog: a view whose
@@ -255,8 +297,6 @@ def replay(
     needing isolation should replay in their own SparkSession or
     ``spark.catalog.dropTempView`` afterwards.
     """
-    from oracle_schema_copy_spark.operators import mutate
-
     applied: list[OpRecord] = []
     # Idempotence: the FIRST insert op for a table in THIS replay run
     # overwrites whatever exists (a prior partial replay's leftovers);
@@ -268,9 +308,7 @@ def replay(
     inserted_this_run: set[str] = set()
     for rec in read_manifest(log_path):
         if rec.kind == "ddl":
-            if execute_sql is not None:
-                for stmt in rec.params["statements"]:
-                    execute_sql(stmt)
+            pass  # payload parquet is self-describing (docstring)
         elif rec.kind == "opaque_sql":
             if on_opaque == "error":
                 raise ValueError(f"opaque SQL operation {rec.seq} on a non-JDBC target")
@@ -285,29 +323,16 @@ def replay(
                 f"AS {rec.params['query']}"
             )
         elif rec.kind == "insert":
-            df = spark.read.parquet(os.path.join(log_path, rec.payload))
+            df = _payload(spark, log_path, rec)
             if rec.table in inserted_this_run:
                 warehouse.append(rec.table, df)
             else:
                 warehouse.write(rec.table, df)
                 inserted_this_run.add(rec.table)
         elif rec.kind == "upsert":
-            updates = spark.read.parquet(os.path.join(log_path, rec.payload))
-            merged = mutate.merge_upsert(
-                warehouse.read(rec.table), updates, rec.params["key_columns"]
-            )
-            warehouse.rewrite(rec.table, merged)
+            warehouse.upsert(rec.table, _payload(spark, log_path, rec), rec.params["key_columns"])
         elif rec.kind == "delete":
-            keys = spark.read.parquet(os.path.join(log_path, rec.payload))
-            # key_columns is the current form; key_column the pre-composite one
-            cols = rec.params.get("key_columns") or [rec.params["key_column"]]
-            if set(cols) <= set(keys.columns):
-                # project by name: tolerates a payload carrying extra
-                # columns (e.g. a legacy single-key record over a wider
-                # key frame) — delete_by_keys requires exact arity
-                keys = keys.select(*cols)
-            kept = mutate.delete_by_keys(warehouse.read(rec.table), cols, keys)
-            warehouse.rewrite(rec.table, kept)
+            warehouse.delete(rec.table, *_delete_keys(spark, log_path, rec))
         else:
             raise ValueError(f"unknown operation kind {rec.kind!r} at seq {rec.seq}")
         applied.append(rec)
@@ -345,37 +370,30 @@ def replay_into_target(
     log_path: str,
     target,
     *,
-    ddl: str = "infer",
     on_opaque: str = "execute",
-    on_view: str = "skip",
 ) -> list[OpRecord]:
     """Replay an operation log into a LIVE execute-target — the
     reference's actual import flow (``Main.java:46-58`` ``import``:
     serialized stream → ordered execution against a JDBC connection,
     §3.2), where :func:`replay` is the parquet-warehouse analog. The
-    target is anything with the ExecuteTarget verb surface
-    (insert/upsert/delete/execute_sql — ``engine.JdbcTarget``,
-    ``sources.derby.DerbyTarget``, ``engine.FileTarget``).
+    target is anything with the target verb surface
+    (insert/upsert/delete/execute_sql — ``engine.JdbcTarget`` and its
+    ``sources.derby.DerbyTarget``, ``Warehouse``, ``OperationLogWriter``).
 
-    ``ddl`` handling, because logged table DDL is Spark-SQL dialect:
-    - ``"infer"`` (default): SKIP logged table-DDL records and create
-      each table on its first insert from the payload parquet's own
-      schema (via ``target.create_table`` when the target has one —
-      dialect-correct for that target). Matches the reference's
-      constraints-AFTER-data load order: tables exist before data,
-      constraint/opaque records still execute in sequence afterwards.
-    - ``"execute"``: pass logged DDL text through ``target.execute_sql``
-      (for targets that speak the logged dialect).
+    Logged table DDL is Spark-SQL dialect, so those records are SKIPPED:
+    each table is created on its first insert from the payload parquet's
+    own schema (via ``target.create_table`` when the target has one —
+    dialect-correct for that target). Matches the reference's
+    constraints-AFTER-data load order: tables exist before data,
+    constraint/opaque records still execute in sequence afterwards.
     ``on_opaque``: ``"execute"`` (default — the reference carries opaque
     source-dialect SQL to live targets), ``"skip"``, or ``"error"``.
-    ``on_view``: ``"execute"`` or ``"skip"`` (default: logged view
-    definitions are Spark-SQL SELECT text; execute only against targets
-    that parse it).
+    View records are skipped too: their definitions are Spark-SQL SELECT
+    text.
 
     Returns the records that actually EXECUTED against the target —
-    records skipped by ``ddl="infer"``/``on_opaque="skip"``/
-    ``on_view="skip"`` are excluded, so callers can audit exactly what
-    reached the database.
+    skipped DDL, opaque and view records are excluded, so callers can
+    audit exactly what reached the database.
 
     Scale: payload chunks stream through ``target.insert`` (parallel
     batched JDBC writes for database targets); upserts/deletes reuse the
@@ -385,41 +403,24 @@ def replay_into_target(
     applied: list[OpRecord] = []
     created: set[str] = set()
     for rec in read_manifest(log_path):
-        if rec.kind == "ddl":
-            if ddl != "execute":
-                continue  # "infer": table DDL is re-derived at first insert
-            target.execute_sql(list(rec.params["statements"]))
-        elif rec.kind == "opaque_sql":
+        if rec.kind in ("ddl", "view"):
+            continue  # Spark-SQL text; tables are re-derived at first insert
+        if rec.kind == "opaque_sql":
             if on_opaque == "error":
                 raise ValueError(f"opaque SQL operation {rec.seq} refused")
             if on_opaque != "execute":
                 continue
             target.execute_sql(list(rec.params["statements"]))
-        elif rec.kind == "view":
-            if on_view != "execute":
-                continue
-            target.execute_sql(
-                [f"CREATE VIEW {rec.params['name']} AS {rec.params['query']}"]
-            )
         elif rec.kind == "insert":
-            df = spark.read.parquet(os.path.join(log_path, rec.payload))
-            if (
-                ddl == "infer"
-                and rec.table not in created
-                and hasattr(target, "create_table")
-            ):
+            df = _payload(spark, log_path, rec)
+            if rec.table not in created and hasattr(target, "create_table"):
                 target.create_table(rec.table, df.schema)
                 created.add(rec.table)
             target.insert(rec.table, df)
         elif rec.kind == "upsert":
-            df = spark.read.parquet(os.path.join(log_path, rec.payload))
-            target.upsert(rec.table, df, rec.params["key_columns"])
+            target.upsert(rec.table, _payload(spark, log_path, rec), rec.params["key_columns"])
         elif rec.kind == "delete":
-            keys = spark.read.parquet(os.path.join(log_path, rec.payload))
-            cols = rec.params.get("key_columns") or [rec.params["key_column"]]
-            if set(cols) <= set(keys.columns):
-                keys = keys.select(*cols)
-            target.delete(rec.table, cols, keys)
+            target.delete(rec.table, *_delete_keys(spark, log_path, rec))
         else:
             raise ValueError(f"unknown operation kind {rec.kind!r} at seq {rec.seq}")
         applied.append(rec)
@@ -431,7 +432,6 @@ def replay_atomic(
     log_path: str,
     warehouse: Warehouse,
     *,
-    execute_sql: Callable[[str], None] | None = None,
     on_opaque: str = "skip",
 ) -> list[OpRecord]:
     """Whole-log transactional replay: the reference imports an entire
@@ -459,9 +459,7 @@ def replay_atomic(
     stage_root = os.path.join(warehouse.root, STAGE_DIRNAME)
     shutil.rmtree(stage_root, ignore_errors=True)
     stage = _StagingWarehouse(spark, stage_root, warehouse)
-    applied = replay(
-        spark, log_path, stage, execute_sql=execute_sql, on_opaque=on_opaque
-    )
+    applied = replay(spark, log_path, stage, on_opaque=on_opaque)
     fd, tmp = tempfile.mkstemp(dir=warehouse.root, suffix=".marker.tmp")
     with os.fdopen(fd, "w") as f:
         json.dump({"tables": sorted(stage.tables_written)}, f)

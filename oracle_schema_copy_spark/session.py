@@ -18,6 +18,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """60% of the host's physical memory, in whole GB: the JVM heap must
+    fit in RAM, or the kernel kills it once ParallelGC grows the heap
+    past what the host has. Falls back to 48g where /proc/meminfo cannot
+    be read."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "48g"
+    return f"{max(1, int(kb * 0.6 / 1024**2))}g"
+
+
 def tuning_confs(cpus: int) -> dict[str, str]:
     return {
         "spark.sql.adaptive.enabled": "true",
@@ -44,7 +57,7 @@ def tuning_confs(cpus: int) -> dict[str, str]:
         # undersized heap turns shuffle/agg working sets into GC storms
         # (observed: same query 5.6s vs 63s run-to-run at 8g). On a real
         # cluster this maps to executor memory, not driver.
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         # ParallelGC, not the Java-17 default G1: with a large heap and 32
         # executor threads, G1's first-touch behavior produced a 30-60×
         # cold-run cliff (measured: the same 1.2s query taking 66-194s on
@@ -56,15 +69,13 @@ def tuning_confs(cpus: int) -> dict[str, str]:
         # collect_list/collect_set aggs use ObjectHashAggregate, which falls
         # back to sort-based aggregation after 128 distinct groups per
         # partition by default — posting-list builds (dedup) have 10⁴-10⁶
-        # groups per partition and never want the sort. Env-overridable for
-        # scale A/Bs; an sf10 A/B (OPTIMIZATION_r13.md §6) showed the bound
-        # never engages even at the 100× fixture (shingle universe stays
-        # under 128k groups/partition, zero spill either way), so the r4
-        # value is kept — the dedup stages' GC load is allocation churn
+        # groups per partition and never want the sort. An sf10 A/B
+        # (OPTIMIZATION_r13.md §6) showed the bound never engages even at
+        # the 100× fixture (shingle universe stays under 128k
+        # groups/partition, zero spill either way), so the r4 value is
+        # kept — the dedup stages' GC load is allocation churn
         # (collect_list buffer growth), not a too-large live map.
-        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": os.environ.get(
-            "SPARK_GRAFT_OBJAGG_FALLBACK", "4194304"
-        ),
+        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "4194304",
     }
 
 

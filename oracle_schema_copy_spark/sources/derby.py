@@ -6,20 +6,14 @@ external database ships in this environment, but Derby 10.16 rides inside
 Spark's own jars directory (``derby-10.16.1.1.jar`` + shared + tools), is
 embeddable (same-JVM, file-backed), and supports ANSI ``MERGE`` — so the
 K1/K4/K5/K6 paths (live batched INSERT, staged MERGE upsert, keyed DELETE,
-ordered DDL execution) can run for real through the exact same
-``spark.write.jdbc`` + ``jvm_statement_executor`` code a production Oracle
-or Postgres target would use.
+ordered DDL execution) run for real through ``engine.JdbcTarget``, the
+same target a production Oracle or Postgres URL gets.
 
-Identifier-case contract (the one Derby-specific wrinkle): Spark's JDBC
-writer QUOTES column names in its generated INSERT/CREATE statements
-(case-sensitive), while hand-written DDL/DML folds unquoted identifiers to
-uppercase. Mixing the two makes "o_orderkey" and O_ORDERKEY different
-columns. The convention here: UPPERCASE-fold every DataFrame before it
-crosses the JDBC boundary (``fold_upper``) and write all hand DDL/DML
-unquoted — both sides then agree on uppercase — and fold back to the
-engine's lowercase schema on read (``fold_names``). This keeps the shared
-SQL generators in ``sources/jdbc_mutations.py`` (unit-tested, unquoted)
-usable verbatim against Derby, Oracle, and Postgres.
+This module only opens and shuts down the embedded database:
+:class:`DerbyTarget` is a ``JdbcTarget`` on an embedded connection. The
+identifier-case fold and the VARCHAR-over-CLOB convention are the Derby
+``Dialect``'s (``sources/dialects.py``), which ``JdbcTarget`` applies to
+every ``jdbc:derby:`` URL.
 
 Scale note: embedded Derby is the TEST database; at production scale the
 same code paths point at a server-class RDBMS via ``JdbcConnection`` with
@@ -31,20 +25,15 @@ this module proves live.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from oracle_schema_copy_spark.engine import JdbcTarget
+from oracle_schema_copy_spark.sources import jdbc_mutations
 from oracle_schema_copy_spark.sources.dialects import get_dialect
 from oracle_schema_copy_spark.sources.jdbc import JdbcConnection
-
-_DERBY = get_dialect("derby")
-
-
-def derby_type(dt: T.DataType, *, varchar_len: int = 1024) -> str:
-    """Derby column type for a Spark type (``sources/dialects.py`` holds
-    the full dialect matrix; the Derby rules — VARCHAR over CLOB so MERGE
-    keys and DELETE predicates stay comparable — live there)."""
-    return _DERBY.column_type(dt, varchar_len=varchar_len)
 
 
 def create_table_sql(
@@ -58,56 +47,22 @@ def create_table_sql(
     """CREATE TABLE DDL for a Spark schema (the ExecuteSqlList-analog DDL
     the reference ships ahead of data, ``CopyUtils.java:682-710`` export
     order), dialect-parameterized — derby (proven live here), oracle,
-    postgres. Unquoted identifiers — the database folds them to a
-    consistent case, matching ``fold_upper``-ed DataFrame writes."""
+    postgres."""
     return get_dialect(dialect).create_table_sql(
         table, schema, primary_key=primary_key, varchar_len=varchar_len
     )
 
 
-def column_types_option(schema: T.StructType, *, varchar_len: int = 1024) -> str:
-    """``createTableColumnTypes`` value forcing VARCHAR for strings when
-    SPARK creates the table (overwrite-mode staging writes) — Spark's
-    DerbyDialect would otherwise map StringType to CLOB, which cannot be
-    compared for equality (breaks MERGE ON and keyed DELETE)."""
-    return ", ".join(
-        f"{f.name} VARCHAR({min(varchar_len, 32672)})"
-        for f in schema.fields
-        if isinstance(f.dataType, T.StringType)
-    )
-
-
 def fold_upper(df: DataFrame) -> DataFrame:
-    """Uppercase-fold column names before a JDBC write (see module doc)."""
-    return df.toDF(*[c.upper() for c in df.columns])
-
-
-def fold_names(df: DataFrame, names: list[str], schema: T.StructType | None = None) -> DataFrame:
-    """Restore the engine's canonical (lowercase) column names after a
-    JDBC read, positionally by the target schema's column order; with
-    ``schema``, also cast each column back to the source Spark type
-    (Derby has no NTZ/LTZ distinction, so a TIMESTAMP_NTZ source column
-    reads back as TIMESTAMP — under UTC sessions the cast is lossless)."""
-    by_upper = {c.upper(): c for c in df.columns}
-    types = {f.name: f.dataType for f in schema.fields} if schema is not None else {}
-    return df.select(
-        *[
-            (
-                df[by_upper[n.upper()]].cast(types[n]).alias(n)
-                if n in types
-                else df[by_upper[n.upper()]].alias(n)
-            )
-            for n in names
-        ]
-    )
+    """Uppercase-fold column names before a hand-driven JDBC write (the
+    fold ``JdbcTarget`` applies for Derby)."""
+    return get_dialect("derby").fold_frame(df)
 
 
 def embedded_connection(spark: SparkSession, db_dir: str, *, create: bool = True) -> JdbcConnection:
     """Connection to a file-backed embedded Derby database inside the
     Spark JVM. Routes derby.log away from the CWD (first call only — the
     property is read when the Derby engine boots)."""
-    import os
-
     os.makedirs(os.path.dirname(db_dir) or ".", exist_ok=True)
     jvm = spark._jvm  # noqa: SLF001
     jvm.java.lang.System.setProperty("derby.stream.error.file", f"{db_dir}.derby.log")
@@ -115,74 +70,17 @@ def embedded_connection(spark: SparkSession, db_dir: str, *, create: bool = True
     return JdbcConnection(url=url)
 
 
-class DerbyTarget:
-    """ExecuteTarget against embedded Derby: the live-database analog of
-    ``engine.JdbcTarget`` with the case-fold + VARCHAR conventions applied
-    at the boundary. Same verb surface (insert/upsert/delete/execute_sql),
-    so ``Engine.copy_tree``/``delete_tree``/``update`` drive it unchanged.
-    """
+class DerbyTarget(JdbcTarget):
+    """ExecuteTarget against an embedded Derby database in ``db_dir``:
+    opens it (created on first use) and shuts it down on ``close()``.
+    Every verb is ``JdbcTarget``'s."""
 
     def __init__(self, spark: SparkSession, db_dir: str, *, varchar_len: int = 1024):
-        from oracle_schema_copy_spark.sources import jdbc_mutations
-
         self.spark = spark
         self.db_dir = db_dir
         self.varchar_len = varchar_len
-        self.conn = embedded_connection(spark, db_dir)
-        self.executor = jdbc_mutations.jvm_statement_executor(spark, self.conn)
-
-    def _types(self, df: DataFrame) -> dict[str, str]:
-        ct = column_types_option(fold_upper(df).schema, varchar_len=self.varchar_len)
-        return {"createTableColumnTypes": ct} if ct else {}
-
-    def insert(self, table: str, df: DataFrame) -> None:
-        from oracle_schema_copy_spark.sources.jdbc import write_table
-
-        write_table(
-            fold_upper(df), self.conn, table.upper(), write_options=self._types(df)
-        )
-
-    def upsert(self, table: str, df: DataFrame, key) -> None:
-        from oracle_schema_copy_spark.sources import jdbc_mutations
-
-        keys = [key] if isinstance(key, str) else list(key)
-        jdbc_mutations.jdbc_upsert(
-            fold_upper(df),
-            self.conn,
-            table.upper(),
-            [k.upper() for k in keys],
-            executor=self.executor,
-            write_options=self._types(df),
-        )
-
-    def delete(self, table: str, key_columns, keys: DataFrame) -> None:
-        from oracle_schema_copy_spark.sources import jdbc_mutations
-
-        cols = [key_columns] if isinstance(key_columns, str) else list(key_columns)
-        jdbc_mutations.jdbc_delete(
-            fold_upper(keys) if isinstance(keys, DataFrame) else keys,
-            self.conn,
-            table.upper(),
-            [c.upper() for c in cols],
-            executor=self.executor,
-            write_options=self._types(keys) if isinstance(keys, DataFrame) else None,
-        )
-
-    def execute_sql(self, statements: list[str]) -> None:
-        self.executor(statements)
-
-    def create_table(self, table: str, schema: T.StructType, primary_key=None) -> None:
-        self.execute_sql(
-            [create_table_sql(table, schema, primary_key=primary_key, varchar_len=self.varchar_len)]
-        )
-
-    def read(
-        self, table: str, names: list[str], schema: T.StructType | None = None, **partition_kwargs
-    ) -> DataFrame:
-        from oracle_schema_copy_spark.sources.jdbc import read_table
-
-        df = read_table(self.spark, self.conn, table.upper(), **partition_kwargs)
-        return fold_names(df, names, schema)
+        conn = embedded_connection(spark, db_dir)
+        super().__init__(conn, executor=jdbc_mutations.jvm_statement_executor(spark, conn))
 
     def close(self) -> None:
         shutdown(self.spark, self.db_dir)

@@ -1,13 +1,30 @@
 """SQL dialect matrix for the live JDBC path.
 
-Embedded Derby proves the execution mechanics live (``sources/derby.py``);
-this module pins the *portability* of the generated SQL — the reference
-targets Oracle (``CopyUtils.java:939-964``: VARCHAR2 vs CLOB/LOB column
-handling on export; ``ExecuteTarget.java:12-32``) and the engine must emit
-dialect-correct DDL/DML for Oracle and Postgres even though no live server
-of either can run in-sandbox. Every generator here is a pure function with
-golden-SQL unit tests (``tests/test_dialects.py``); the Derby dialect is
-the one additionally proven live by the ``livedb`` queries.
+The reference targets Oracle (``CopyUtils.java:939-964``: VARCHAR2 vs
+CLOB/LOB column handling on export; ``ExecuteTarget.java:12-32``); the
+engine must emit dialect-correct DDL/DML for Oracle and Postgres even
+though neither runs in the test suite. Every generator here
+is a pure function with golden-SQL unit tests (``tests/test_dialects.py``);
+the Derby dialect is the one additionally proven live by the ``livedb``
+queries and ``tests/test_derby_live.py``.
+
+``engine.JdbcTarget`` resolves its dialect from the connection URL
+(:func:`dialect_for_url`) and applies the dialect's boundary conventions
+to every verb:
+
+- **Identifier case.** Spark's JDBC writer QUOTES column names in its
+  generated INSERT/CREATE statements (case-sensitive), while hand-written
+  DDL/DML is unquoted and folded by the database (``identifier_case``:
+  upper for Derby and Oracle, lower for Postgres). Mixing the two makes
+  "o_orderkey" and O_ORDERKEY different columns, so the target folds
+  every DataFrame and table name to the database's case before it crosses
+  the boundary, and :func:`fold_names` restores the engine's lowercase
+  schema on read. The shared SQL generators in
+  ``sources/jdbc_mutations.py`` (unit-tested, unquoted) then work
+  verbatim against all three.
+- **Spark-created tables.** Staging tables are created by Spark's writer
+  with Spark's own type mapping; Derby's maps strings to CLOB, which
+  cannot be compared, so :meth:`Dialect.write_options` forces VARCHAR.
 
 Type-mapping rules per dialect:
 
@@ -32,6 +49,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 # Shared scalar mappings keyed by Spark type class, per dialect. Strings,
@@ -91,6 +109,27 @@ class Dialect:
     lob_type: str  # what strings above varchar_max become under 'lob'
     decimal_keyword: str  # DECIMAL / NUMBER / NUMERIC
     merge_style: str  # 'ansi' or 'postgres_upsert'
+    identifier_case: str  # 'upper' / 'lower': how unquoted names fold
+
+    def fold(self, name: str) -> str:
+        """``name`` as the database stores an unquoted identifier."""
+        return name.upper() if self.identifier_case == "upper" else name.lower()
+
+    def fold_frame(self, df: DataFrame) -> DataFrame:
+        """Fold column names before a JDBC write (module doc)."""
+        return df.toDF(*[self.fold(c) for c in df.columns])
+
+    def write_options(self, schema: T.StructType, *, varchar_len: int = 1024) -> dict[str, str]:
+        """Per-write options for tables SPARK creates (overwrite-mode
+        staging writes): on Derby, ``createTableColumnTypes`` forcing
+        VARCHAR for strings — Spark's DerbyDialect would otherwise map
+        StringType to CLOB, which cannot be compared for equality (breaks
+        MERGE ON and keyed DELETE)."""
+        if self.name != "derby":
+            return {}
+        vc = self.column_type(T.StringType(), varchar_len=varchar_len)
+        ct = ", ".join(f"{f.name} {vc}" for f in schema.fields if isinstance(f.dataType, T.StringType))
+        return {"createTableColumnTypes": ct} if ct else {}
 
     def column_type(self, dt: T.DataType, *, varchar_len: int = 1024) -> str:
         """SQL column type for one Spark type."""
@@ -120,10 +159,9 @@ class Dialect:
     ) -> str:
         """CREATE TABLE DDL for a Spark schema (the ExecuteSqlList-analog
         DDL the reference ships ahead of data, ``CopyUtils.java:682-710``
-        export order). Unquoted identifiers, uppercase — every supported
-        dialect folds unquoted identifiers consistently, and the JDBC
-        boundary uppercase-folds DataFrames to match (``sources/derby.py``
-        module doc)."""
+        export order). Unquoted identifiers, uppercase — the database
+        folds them to its ``identifier_case``, the case the JDBC boundary
+        folds DataFrames to (module doc)."""
         pk = [c.upper() for c in (primary_key or [])]
         cols = []
         for f in schema.fields:
@@ -148,6 +186,7 @@ DIALECTS: dict[str, Dialect] = {
         lob_type="CLOB",
         decimal_keyword="DECIMAL",
         merge_style="ansi",
+        identifier_case="upper",
     ),
     "oracle": Dialect(
         name="oracle",
@@ -157,6 +196,7 @@ DIALECTS: dict[str, Dialect] = {
         lob_type="CLOB",
         decimal_keyword="NUMBER",
         merge_style="ansi",
+        identifier_case="upper",
     ),
     "postgres": Dialect(
         name="postgres",
@@ -166,6 +206,7 @@ DIALECTS: dict[str, Dialect] = {
         lob_type="TEXT",
         decimal_keyword="NUMERIC",
         merge_style="postgres_upsert",
+        identifier_case="lower",
     ),
 }
 
@@ -177,3 +218,36 @@ def get_dialect(name: str) -> Dialect:
         raise ValueError(
             f"unknown dialect {name!r}; known: {sorted(DIALECTS)}"
         ) from None
+
+
+_URL_SCHEMES = {"jdbc:derby:": "derby", "jdbc:oracle:": "oracle", "jdbc:postgresql:": "postgres"}
+
+
+def dialect_for_url(url: str) -> Dialect | None:
+    """The dialect a JDBC URL speaks; None for any other scheme (ANSI
+    MERGE, identifiers passed through as given)."""
+    for prefix, name in _URL_SCHEMES.items():
+        if url.startswith(prefix):
+            return DIALECTS[name]
+    return None
+
+
+def fold_names(df: DataFrame, names: list[str], schema: T.StructType | None = None) -> DataFrame:
+    """Restore the engine's canonical (lowercase) column names after a
+    JDBC read, matching case-insensitively by the target schema's column
+    order; with ``schema``, also cast each column back to the source Spark
+    type (Derby has no NTZ/LTZ distinction, so a TIMESTAMP_NTZ source
+    column reads back as TIMESTAMP — under UTC sessions the cast is
+    lossless)."""
+    by_upper = {c.upper(): c for c in df.columns}
+    types = {f.name: f.dataType for f in schema.fields} if schema is not None else {}
+    return df.select(
+        *[
+            (
+                df[by_upper[n.upper()]].cast(types[n]).alias(n)
+                if n in types
+                else df[by_upper[n.upper()]].alias(n)
+            )
+            for n in names
+        ]
+    )

@@ -139,18 +139,20 @@ def delete_tuples_sql(
     """Composite-key batched delete: ``DELETE ... WHERE (a=.. AND b=..) OR
     ...`` — OR-of-AND rather than a row-value ``(a, b) IN (...)`` because
     row-value constructors are not portable (SQL Server lacks them).
-    Same ``DELETE_BATCH`` batching as the single-column path."""
+    ``DELETE_BATCH // arity`` tuples per statement, so a statement carries
+    at most ``DELETE_BATCH`` key literals, like the single-column path."""
     cols = list(key_columns)
     out = []
     ts = list(key_tuples)
-    for i in range(0, len(ts), DELETE_BATCH):
+    batch = max(1, DELETE_BATCH // len(cols))
+    for i in range(0, len(ts), batch):
         preds = " OR ".join(
             "("
             + " AND ".join(
                 f"{c} = {sql_literal(v)}" for c, v in zip(cols, t)
             )
             + ")"
-            for t in ts[i : i + DELETE_BATCH]
+            for t in ts[i : i + batch]
         )
         out.append(f"DELETE FROM {table} WHERE {preds}")
     return out
@@ -280,13 +282,16 @@ def jdbc_delete(
     allow_production: bool = False,
     write_options: dict[str, str] | None = None,
 ) -> list[str]:
-    """Keyed delete, single-column or composite. Key sets up to
-    ``max_inline_keys`` ship as batched IN-list (single column) or
-    OR-of-AND (composite) statements — bounded driver memory: keys only,
-    never rows. A larger key DataFrame is staged to the database and
-    deleted with one set-oriented EXISTS statement — no driver collect of
-    the key set. A keys DataFrame pairs its columns positionally with
-    ``key_columns`` and must match in arity.
+    """Keyed delete, single-column or composite. A single-column key
+    DataFrame of up to ``max_inline_keys`` distinct keys ships as batched
+    IN-list statements — bounded driver memory: keys only, never rows. A
+    larger one, and every composite-key DataFrame, is staged to the
+    database and deleted with one set-oriented EXISTS statement (large
+    OR-of-AND statements are more than some databases parse: Derby
+    rejects them as "Statement too complex"). Iterable keys always go
+    inline, composite ones as batched OR-of-AND statements. A keys
+    DataFrame pairs its columns positionally with ``key_columns`` and must
+    match in arity.
     Returns the executed statements."""
     prod_check(conn.url, allow_production=allow_production)
     cols = [key_columns] if isinstance(key_columns, str) else list(key_columns)
@@ -295,9 +300,13 @@ def jdbc_delete(
             f"key frame arity mismatch: {len(keys.columns)} columns vs {cols}"
         )
         distinct = keys.distinct()
-        # bounded probe: count first, collect only under the inline cap
-        n = distinct.count()
-        if n > max_inline_keys:
+        # one bounded action: more than the cap comes back only as cap + 1
+        key_list = (
+            [tuple(r) for r in distinct.limit(max_inline_keys + 1).collect()]
+            if len(cols) == 1
+            else None
+        )
+        if key_list is None or len(key_list) > max_inline_keys:
             staging = staging_name(table, "delete")
             write_table(
                 distinct.toDF(*cols),
@@ -314,7 +323,6 @@ def jdbc_delete(
             ]
             executor(statements)
             return statements
-        key_list = [tuple(r) for r in distinct.collect()]
     else:
         key_list = [
             tuple(k) if isinstance(k, (tuple, list)) else (k,)

@@ -12,16 +12,3 @@ from oracle_schema_copy_spark.queries import (  # noqa: F401
 from oracle_schema_copy_spark.queries.reference_surface import (  # noqa: F401
     q_copy_tree_lineitem,
 )
-
-
-def __getattr__(name):
-    from oracle_schema_copy_spark import queries as _q
-
-    _q._load_all()
-    for mod_name in ("reference_surface", "relational", "pipeline", "streaming"):
-        import importlib
-
-        mod = importlib.import_module(f"oracle_schema_copy_spark.queries.{mod_name}")
-        if hasattr(mod, name):
-            return getattr(mod, name)
-    raise AttributeError(name)

@@ -13,7 +13,7 @@ from pyspark.sql import types as T
 
 from oracle_schema_copy_spark.sources import jdbc_mutations as jm
 from oracle_schema_copy_spark.sources.derby import create_table_sql
-from oracle_schema_copy_spark.sources.dialects import DIALECTS, get_dialect
+from oracle_schema_copy_spark.sources.dialects import DIALECTS, dialect_for_url, get_dialect
 
 # One schema exercising every mapped family: integer widths, IEEE floats,
 # decimal, boolean, date/timestamp, binary, short + oversize strings.
@@ -132,3 +132,45 @@ def test_delete_generators_are_dialect_portable():
         "(SELECT 1 FROM T_STG s WHERE s.A = t.A AND s.B = t.B)"
     )
     assert " AS " not in ex
+
+
+GOLDEN_URL_DIALECT = {
+    "jdbc:derby:/tmp/db;create=true": "derby",
+    "jdbc:derby:memory:x": "derby",
+    "jdbc:oracle:thin:@host:1521/SVC": "oracle",
+    "jdbc:postgresql://host:5432/db": "postgres",
+    "jdbc:h2:mem:test": None,
+    "jdbc:sqlserver://host;databaseName=db": None,
+    # the scheme, not a substring, decides
+    "jdbc:h2:mem:oracle": None,
+}
+
+
+@pytest.mark.parametrize("url", sorted(GOLDEN_URL_DIALECT))
+def test_url_dialect_golden(url):
+    d = dialect_for_url(url)
+    assert (d.name if d else None) == GOLDEN_URL_DIALECT[url]
+
+
+GOLDEN_FOLD = {"derby": "O_ORDERKEY", "oracle": "O_ORDERKEY", "postgres": "o_orderkey"}
+
+
+@pytest.mark.parametrize("dialect", sorted(DIALECTS))
+def test_identifier_fold_golden(dialect):
+    """Each dialect folds to the case its database stores unquoted
+    identifiers in: upper for Derby and Oracle, lower for Postgres."""
+    d = get_dialect(dialect)
+    assert d.fold("o_OrderKey") == GOLDEN_FOLD[dialect]
+    assert d.fold(d.fold("o_OrderKey")) == GOLDEN_FOLD[dialect]
+
+
+def test_write_options_force_varchar_on_derby_only():
+    schema = T.StructType(
+        [T.StructField("K", T.LongType()), T.StructField("NAME", T.StringType())]
+    )
+    assert get_dialect("derby").write_options(schema) == {
+        "createTableColumnTypes": "NAME VARCHAR(1024)"
+    }
+    assert get_dialect("derby").write_options(T.StructType(schema.fields[:1])) == {}
+    assert get_dialect("oracle").write_options(schema) == {}
+    assert get_dialect("postgres").write_options(schema) == {}

@@ -38,7 +38,7 @@ def test_delete_tree_child_first_on_warehouse(engine, spark, tmp_path):
     engine.delete_tree(
         wh_target, ["CUSTOMER->ORDERS.O_CUSTKEY", "ORDERS->LINEITEM.L_ORDERKEY"], [1, 2]
     )
-    wh = wh_target.wh
+    wh = wh_target
     assert wh.read("customer").filter(F.col("c_custkey").isin([1, 2])).count() == 0
     assert (
         wh.read("orders").join(
@@ -74,10 +74,10 @@ def test_delete_tree_payload_carries_composite_key(engine, spark, tmp_path):
 def test_copy_and_update_verbs(engine, tmp_path):
     wh_target = engine.create_warehouse_target(str(tmp_path / "wh"))
     engine.copy(wh_target, "nation")
-    assert wh_target.wh.read("nation").count() == 25
+    assert wh_target.read("nation").count() == 25
     updates = engine.table("nation").withColumn("n_name", F.upper(F.col("n_name")))
     engine.update(wh_target, "nation", updates)
-    assert wh_target.wh.read("nation").filter(F.col("n_name") != F.upper(F.col("n_name"))).count() == 0
+    assert wh_target.read("nation").filter(F.col("n_name") != F.upper(F.col("n_name"))).count() == 0
 
 
 def test_export_import_schema_end_to_end(engine, spark, tmp_path):

@@ -236,3 +236,64 @@ def test_read_table_keyed_adversarial_keys_roundtrip(spark, tmp_path):
         run_int()
     finally:
         tgt.close()
+
+
+@pytest.mark.parametrize("n_keys, staged", [(5, False), (6, True)])
+def test_jdbc_delete_inline_cap_boundary(spark, monkeypatch, n_keys, staged):
+    """``max_inline_keys`` distinct keys go inline; one more goes through
+    the staged EXISTS delete."""
+    writes: list[str] = []
+    monkeypatch.setattr(jm, "write_table", lambda df, conn, table, **kw: writes.append(table))
+    recorded: list[str] = []
+    keys = spark.range(n_keys).toDF("k").union(spark.range(n_keys).toDF("k"))
+    stmts = jm.jdbc_delete(
+        keys,
+        JdbcConnection(url="jdbc:h2:mem:test"),
+        "t",
+        "k",
+        executor=recorded.extend,
+        max_inline_keys=5,
+    )
+    assert recorded == stmts
+    if staged:
+        assert writes == ["t_oscs_delete_stg"]
+        assert stmts[1] == jm.delete_using_staging_sql("t", "t_oscs_delete_stg", ["k"])
+    else:
+        assert writes == [] and len(stmts) == 1
+        assert stmts[0].startswith("DELETE FROM t WHERE k IN (")
+        inlined = stmts[0][stmts[0].index("(") + 1 : -1].split(", ")
+        assert sorted(int(k) for k in inlined) == list(range(n_keys))
+
+
+def test_jdbc_delete_composite_frame_is_staged_iterable_inline(spark, monkeypatch):
+    """Composite-key frames always stage (no OR-of-AND statement at all);
+    composite iterables stay inline, DELETE_BATCH // arity tuples per
+    statement."""
+    writes: list[str] = []
+    monkeypatch.setattr(jm, "write_table", lambda df, conn, table, **kw: writes.append(table))
+    conn = JdbcConnection(url="jdbc:h2:mem:test")
+    frame = spark.createDataFrame([(1, 1), (1, 2)], ["a", "b"])
+    stmts = jm.jdbc_delete(frame, conn, "t", ["a", "b"], executor=lambda s: None)
+    assert writes == ["t_oscs_delete_stg"] and "EXISTS" in stmts[1]
+
+    tuples = [(i, i + 1) for i in range(jm.DELETE_BATCH // 2 + 1)]
+    stmts = jm.jdbc_delete(tuples, conn, "t", ["a", "b"], executor=lambda s: None)
+    last = len(tuples) - 1
+    assert len(stmts) == 2 and stmts[1] == f"DELETE FROM t WHERE (a = {last} AND b = {last + 1})"
+    assert writes == ["t_oscs_delete_stg"]
+
+
+@pytest.mark.parametrize(
+    "url, stmt",
+    [
+        ("jdbc:h2:mem:test", "DELETE FROM Orders WHERE O_OrderKey IN (1, 2)"),
+        ("jdbc:derby:memory:x", "DELETE FROM ORDERS WHERE O_ORDERKEY IN (1, 2)"),
+        ("jdbc:postgresql://h/db", "DELETE FROM orders WHERE o_orderkey IN (1, 2)"),
+    ],
+)
+def test_jdbc_target_folds_names_by_url_dialect(url, stmt):
+    recorded: list[str] = []
+    JdbcTarget(JdbcConnection(url=url), executor=recorded.extend).delete(
+        "Orders", "O_OrderKey", [1, 2]
+    )
+    assert recorded == [stmt]

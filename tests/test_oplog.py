@@ -266,7 +266,6 @@ def test_view_and_opaque_objects_roundtrip(spark, sf_dir, tmp_path):
 
     # a JDBC/SQL-catalog target receives the opaque statements verbatim
     executed: list[str] = []
-    from oracle_schema_copy_spark.engine import FileTarget  # noqa: F401  (kind parity)
 
     for rec in oplog.read_manifest(log):
         if rec.kind == "opaque_sql":
