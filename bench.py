@@ -19,7 +19,12 @@ the median and round-over-round comparisons became undecidable):
 - **7 timed runs per query** (``SPARK_GRAFT_BENCH_RUNS``), reported as a
   one-sided trimmed median (worst third dropped — contention noise is
   one-sided, see ``_trimmed_median``), plus min, max-min spread, and the
-  full sample list so outliers are visible in the record.
+  full sample list so outliers are visible in the record. Each sample is
+  also split into driver ``build`` and ``exec``, and the full record
+  carries per-query ``stages`` totals (``_time_query``).
+- ``python bench.py --one <name>`` is the timing child: any registered
+  name, one fresh JVM, one ``BENCH_ONE {...}`` line on stdout.
+  ``tools/ab.py`` alternates it between two checkouts.
 - Machine state (cpu count, 1-min loadavg before/after, fixed CPU-speed
   probe + steal) is recorded so an overloaded-sandbox run is
   distinguishable from a plan regression.
@@ -64,6 +69,12 @@ def _time_query(spark, fn, sf_dir: str, runs: int) -> dict:
     5× first-sample JIT residue (C2 compiles the hot loops during/after
     the first full execution).
 
+    Each sample is split into ``build`` (``fn(spark, sf_dir)``: py4j,
+    analysis and any eager jobs inside the builder) and ``exec``
+    (``.count()``); ``samples`` is their sum, timed as one region. After
+    the last sample, outside the timed region, ``stages`` sums the status
+    store's metrics over the stages the timed samples ran.
+
     The timed phase is bounded by ``SPARK_GRAFT_BENCH_QUERY_BUDGET``
     seconds (default 60, min 3 samples always taken): under co-tenant
     contention a single sample can take 30s+, and an unbounded 7-sample
@@ -75,16 +86,76 @@ def _time_query(spark, fn, sf_dir: str, runs: int) -> dict:
     assert fn(spark, sf_dir).count() >= 0
     warm = time.perf_counter() - t0
     budget = float(os.environ.get("SPARK_GRAFT_BENCH_QUERY_BUDGET", "60"))
-    samples = []
+    before = _stage_totals(spark)["last_stage"]
+    samples, build, exec_ = [], [], []
     t_start = time.perf_counter()
     for i in range(runs):
         if i >= 3 and time.perf_counter() - t_start > budget:
             break
         t0 = time.perf_counter()
-        assert fn(spark, sf_dir).count() >= 0
-        samples.append(round(time.perf_counter() - t0, 3))
-    return {"samples": samples, "warmup": round(warm, 3)}
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        assert df.count() >= 0
+        t2 = time.perf_counter()
+        samples.append(round(t2 - t0, 3))
+        build.append(round(t1 - t0, 3))
+        exec_.append(round(t2 - t1, 3))
+    return {
+        "samples": samples,
+        "build": build,
+        "exec": exec_,
+        "warmup": round(warm, 3),
+        "stages": _stage_totals(spark, after=before),
+    }
 
+
+def _stage_totals(spark, after: int = -1) -> dict:
+    """Resource totals over the status store's stages whose id is above
+    ``after``: stage count, executor run/CPU/GC ms, input and shuffle
+    bytes, memory and disk spill, and peak execution memory (max over the
+    stages). Stage ids grow with submission, so ``last_stage`` of one call
+    passed as ``after`` to the next selects the stages run in between.
+    The listener bus is drained first, so every stage of a returned job
+    is complete in the store.
+
+    CPU time sums raw nanoseconds: a per-stage floor-divide would lose up
+    to ~1 ms per stage across many-stage queries. executorCpuTime
+    excludes GC pauses, so compare GC share alongside it (CLAUDE.md)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    stages = sc._jsc.sc().statusStore().stageList(
+        None, False, False, sc._gateway.new_array(sc._jvm.double, 0), None
+    )
+    tot = dict.fromkeys(
+        (
+            "n_stages", "run_ms", "cpu_ms", "gc_ms", "input_bytes",
+            "shuffle_read_bytes", "shuffle_write_bytes", "memory_bytes_spilled",
+            "disk_bytes_spilled", "peak_execution_memory",
+        ),
+        0,
+    )
+    cpu_ns, last = 0, after
+    it = stages.iterator()
+    while it.hasNext():
+        s = it.next()
+        if s.stageId() <= after:
+            continue
+        last = max(last, s.stageId())
+        tot["n_stages"] += 1
+        tot["run_ms"] += s.executorRunTime()
+        cpu_ns += s.executorCpuTime()
+        tot["gc_ms"] += s.jvmGcTime()
+        tot["input_bytes"] += s.inputBytes()
+        tot["shuffle_read_bytes"] += s.shuffleReadBytes()
+        tot["shuffle_write_bytes"] += s.shuffleWriteBytes()
+        tot["memory_bytes_spilled"] += s.memoryBytesSpilled()
+        tot["disk_bytes_spilled"] += s.diskBytesSpilled()
+        tot["peak_execution_memory"] = max(
+            tot["peak_execution_memory"], s.peakExecutionMemory()
+        )
+    tot["cpu_ms"] = cpu_ns // 1_000_000
+    tot["last_stage"] = last
+    return tot
 
 
 # TPC-H shape set: the five shapes living in relational.py under their
@@ -130,13 +201,15 @@ def _query_set():
 
 
 def _run_one(name: str, sf_dir: str, cpus: int, runs: int) -> None:
-    """Subprocess entry: fresh JVM, warmup, time one query, print JSON."""
+    """Subprocess entry: fresh JVM, warmup, time one registered query
+    (any name, whatever the bench set), print JSON."""
+    from oracle_schema_copy_spark import suite
     from oracle_schema_copy_spark.session import get_spark
 
     spark = get_spark(f"oscs-bench-{name}", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     _warmup(spark)
-    res = _time_query(spark, _query_set()[1][name], sf_dir, runs)
+    res = _time_query(spark, suite.queries()[name], sf_dir, runs)
     print("BENCH_ONE " + json.dumps({"name": name, **res}), flush=True)
     spark.stop()
 
@@ -160,6 +233,16 @@ def _trimmed_median(xs: list[float]) -> float:
     return _median(s[: len(s) - drop])
 
 
+def _probe_sec() -> float:
+    """Seconds for a fixed single-thread Python workload (a 5M-iteration
+    loop): the host's CPU speed, the same work every round."""
+    t0 = time.perf_counter()
+    s = 0
+    for i in range(5_000_000):
+        s += i
+    return round(time.perf_counter() - t0, 4)
+
+
 def _cpu_probe() -> dict:
     """Machine-speed calibration recorded alongside the timings: a fixed
     single-thread Python workload plus the /proc/stat steal share over a
@@ -168,11 +251,7 @@ def _cpu_probe() -> dict:
     a quiet-loadavg machine running the identical committed queries ~1.5×
     slower than r6 with ~6% steal at idle. Cross-round comparisons should
     normalize by probe_sec (same fixed work every round)."""
-    t0 = time.perf_counter()
-    s = 0
-    for i in range(5_000_000):
-        s += i
-    probe = round(time.perf_counter() - t0, 4)
+    probe = _probe_sec()
     steal = None
     try:
         def snap():
@@ -311,11 +390,7 @@ def main() -> None:
         waited = 0.0
         while True:
             load = os.getloadavg()[0]
-            t0 = time.perf_counter()
-            s = 0
-            for i in range(5_000_000):
-                s += i
-            probe = round(time.perf_counter() - t0, 4)
+            probe = _probe_sec()
             ok = probe <= GATE_PROBE_MAX and load <= GATE_LOAD_MAX
             if ok or waited >= per_q_wait:
                 return {"probe_sec": probe, "loadavg_1m": round(load, 2), "gate_ok": ok}
@@ -417,6 +492,9 @@ def main() -> None:
         "spread": spreads,
         "samples": {n: r["samples"] for n, r in per_query.items()},
         "warmup": {n: r["warmup"] for n, r in per_query.items()},
+        "build": {n: r["build"] for n, r in per_query.items()},
+        "exec": {n: r["exec"] for n, r in per_query.items()},
+        "stages": {n: r["stages"] for n, r in per_query.items()},
         "runs_per_query": runs,
         "isolated": isolate,
         "cpus": cpus,

@@ -32,21 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def assert_unique_keys(df: DataFrame, key_columns: list[str], side: str = "updates") -> None:
-    """Raise if any key occurs more than once (reference's >1-row-updated guard)."""
-    dup = (
-        df.groupBy(*[F.col(c) for c in key_columns])
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-        .limit(1)
-        .collect()
-    )
-    if dup:
-        raise AssertionError(
-            f"{side} has duplicate key {dup[0][:len(key_columns)]} — upsert would match >1 row"
-        )
-
-
 def merge_upsert(
     target: DataFrame,
     updates: DataFrame,

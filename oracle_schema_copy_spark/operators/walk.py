@@ -139,11 +139,6 @@ class TableSelection:
             self._keys = self.rows.select(*self.key_columns).distinct().cache()
         return self._keys
 
-    @property
-    def key_column(self) -> str:
-        """Single-key convenience accessor (leading column for composites)."""
-        return self.key_columns[0]
-
 
 def keyed_scan(
     table_df: DataFrame, key_columns: str | Sequence[str], keys: DataFrame

@@ -3,8 +3,8 @@
 
 Two invariants (ADVICE r9):
 - the root lives next to THIS checkout (a second tree — e.g. the
-  tools/ab_bench.py A/B worktree — scratches in its own repo, never in
-  another one), overridable via ``SPARK_GRAFT_SCRATCH``;
+  baseline checkout of a tools/ab.py A/B — scratches in its own repo,
+  never in another one), overridable via ``SPARK_GRAFT_SCRATCH``;
 - per-uuid dirs are swept once stale: every query builds a fresh dir and
   collects within its own run, so an entry untouched for hours can only
   belong to an earlier JVM — without the sweep a full-registry pass leaves

@@ -105,9 +105,9 @@ def read_table_keyed(
     index lookup; only matching rows cross the wire.
 
     This is SURVEY §4's custom-strategy candidate for walking a subgraph
-    OUT of a live database (``S2 keyed scan``): the A/B against the
-    default read-all + Spark semi-join is tools/inlist_ab.py, recorded in
-    BENCH_NOTES_r10.md — pushed probes win when the frontier is a small
+    OUT of a live database (``S2 keyed scan``): the r10 A/B against the
+    default read-all + Spark semi-join is recorded in BENCH_NOTES_r10.md
+    §1 — pushed probes win when the frontier is a small
     fraction of the child table (the common copy_tree shape) because the
     read-all path ships the entire child table through JDBC first.
 
@@ -209,12 +209,14 @@ def read_table_keyed_auto(
     delete verb's automatic scale switch: frontiers up to
     ``max_inline_keys`` collect driver-side (keys only, bounded) and go
     as batched pushed IN-list probes; larger frontiers stage into the
-    database and probe with one set-oriented join — no driver collect.
-    Returns (rows, path) with path in {'pushed', 'staged'} so callers
-    (and the gating oracle) can assert the crossover rule itself."""
+    database and probe with one set-oriented join — at most cap + 1 keys
+    ever reach the driver. Returns (rows, path) with path in
+    {'pushed', 'staged'} so callers (and the gating oracle) can assert
+    the crossover rule itself."""
     distinct = keys_df.toDF(key_column).distinct()
-    n = distinct.count()  # bounded probe: count before any collect
-    if n > max_inline_keys:
+    # one bounded action: more than the cap comes back only as cap + 1
+    frontier = [r[0] for r in distinct.limit(max_inline_keys + 1).collect()]
+    if len(frontier) > max_inline_keys:
         return (
             read_table_keyed_staged(
                 spark, conn, table, key_column, distinct,
@@ -223,7 +225,6 @@ def read_table_keyed_auto(
             ),
             "staged",
         )
-    frontier = [r[0] for r in distinct.collect()]  # keys only, bounded
     return (
         read_table_keyed(
             spark, conn, table, key_column, frontier,

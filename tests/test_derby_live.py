@@ -233,6 +233,29 @@ def test_read_table_keyed_pushed_probe(spark, tgt):
     assert [f.name for f in empty.schema.fields] == ["K", "V", "P"]
 
 
+def test_read_table_keyed_auto_cap_boundary(spark, tgt):
+    """One bounded action decides the path: n distinct keys at a cap of n
+    push the IN-list, at a cap of n - 1 stage the keys; both return the
+    same rows (duplicate and missing keys included)."""
+    from oracle_schema_copy_spark.sources.jdbc import read_table_keyed_auto
+
+    df = _mk(spark, [(i, f"v{i}", float(i)) for i in range(30)])
+    tgt.create_table("t", df.schema, primary_key=["k"])
+    tgt.insert("t", df)
+    keys = spark.createDataFrame([Row(k=k) for k in [2, 5, 5, 17, 29, 99]])
+    n = 5  # distinct keys
+
+    def run(cap):
+        rows, path = read_table_keyed_auto(
+            spark, tgt.conn, "T", "K", keys, max_inline_keys=cap, keys_per_probe=2
+        )
+        return path, sorted(tuple(r) for r in rows.collect())
+
+    pushed, staged = run(n), run(n - 1)
+    assert (pushed[0], staged[0]) == ("pushed", "staged")
+    assert pushed[1] == staged[1] == [(k, f"v{k}", float(k)) for k in (2, 5, 17, 29)]
+
+
 def test_create_db_target_insert_upsert_delete_roundtrip(spark, jdbc_tgt):
     test_live_insert_upsert_delete_roundtrip(spark, jdbc_tgt)
 
